@@ -12,6 +12,7 @@ Usage:
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -48,11 +49,17 @@ def main():
     def docs_nospread(spark, sf_dir, spread=True):
         return orig_docs(spark, sf_dir, spread=False)
 
+    def rows_digest(df):
+        """Order-free digest of the result rows: a spread only
+        reorders, so on and off must agree row for row."""
+        rows = sorted(repr(tuple(r)) for r in df.collect())
+        return hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
     qs = B.bench_queries()
     out = {}
     for name in names:
         _cat, fn = qs[name]
-        on, off, rows_on, rows_off = [], [], None, None
+        on, off, digest_on, digest_off = [], [], None, None
         for _ in range(reps):
             for variant in ("on", "off"):
                 if variant == "off":
@@ -60,22 +67,24 @@ def main():
                     QE._docs = docs_nospread
                 try:
                     t0 = time.time()
-                    n = fn(spark, sf_dir).count()
+                    df = fn(spark, sf_dir)
+                    df.count()
                     dt = time.time() - t0
+                    digest = rows_digest(df)
                 finally:
                     Q._docs = orig_docs
                     QE._docs = orig_docs
                 spark.catalog.clearCache()
                 if variant == "on":
                     on.append(round(dt, 3))
-                    rows_on = n
+                    digest_on = digest
                 else:
                     off.append(round(dt, 3))
-                    rows_off = n
+                    digest_off = digest
         out[name] = {
             "on_min": min(on), "off_min": min(off),
             "on": on, "off": off,
-            "rows_equal": rows_on == rows_off,
+            "rows_equal": digest_on == digest_off,
         }
     spark.stop()
     print(json.dumps(out))

@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 
 from tin_terrain_spark.kernels.raster import Grid
+from tin_terrain_spark.operators.meshing import generate_tin
 from tin_terrain_spark.pipeline.dem2tin import dem2tin, write_mesh_file
 from tin_terrain_spark.sources.geotiff import write_geotiff
 
@@ -67,3 +68,5 @@ def test_unknown_format_is_loud(tif, tmp_path):
         dem2tin(tif, str(tmp_path / "mesh.xyz9"))
     with pytest.raises(ValueError, match="unknown output format"):
         write_mesh_file(np.zeros((3, 3)), np.array([[0, 1, 2]]), "x", fmt="stl")
+    with pytest.raises(ValueError, match="unknown meshing method"):
+        generate_tin(Grid(np.zeros((4, 4))), "delaunay", 1.0, 1)

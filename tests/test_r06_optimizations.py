@@ -181,6 +181,10 @@ def test_docs_spread_auto_gates_on_input_size(spark, monkeypatch):
     b = {tuple(r) for r in spread.collect()}
     assert a == b
 
+    # any other string is a typo, not a truthy "spread"
+    with pytest.raises(ValueError, match="spread must be"):
+        Q._docs(spark, SF, spread="yes")
+
 
 def test_spread_pays_fallbacks():
     """Non-file inputs (directories / object-store paths) must default
@@ -197,7 +201,8 @@ def test_spread_pays_reads_footer_not_compressed_size(tmp_path):
     """Dup-heavy corpora compress far below the byte gate while still
     carrying per-row map work — the gate must read the parquet footer
     (row count / uncompressed bytes), not the compressed file size. A
-    20k-row constant column compresses to a few KB but must spread."""
+    constant column just above the row gate (16k+1 rows) compresses to
+    a few KB but must spread."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -211,7 +216,7 @@ def test_spread_pays_reads_footer_not_compressed_size(tmp_path):
     import os
 
     assert os.path.getsize(path) < 1024 * 1024  # tiny on disk...
-    assert _spread_pays(path) is True           # ...but 20k rows of work
+    assert _spread_pays(path) is True           # ...but 16k+1 rows of work
 
 
 def test_knn_ring_prune_multi_round_equals_brute(spark):

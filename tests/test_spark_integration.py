@@ -509,27 +509,36 @@ def test_short_doc_shingles(spark):
     assert any(r.doc_a == 1 and r.doc_b == 2 and r.jaccard == 1.0 for r in nd)
 
 
-def test_stream_kernel_equals_grouped_kernel(points):
+@pytest.mark.parametrize("batch_rows", [None, 7], ids=["default", "7"])
+def test_stream_kernel_equals_grouped_kernel(spark, points, batch_rows):
     """The streaming mapInPandas mesh path (one Arrow round per batch
     of tiles) must produce byte-identical rows to the per-group
-    applyInPandas path — terrain blobs included."""
+    applyInPandas path — terrain blobs included. With 7-row Arrow
+    batches every tile spans several batches, so the carry-over of a
+    tile's rows into the next batch is exercised too."""
     from tin_terrain_spark.operators.meshing import (
         TILE_SCHEMA, _make_mesh_kernel, cell_grid, mesh_tiles,
     )
 
-    args = (2, 5, 2, "terra", 2.0, 1, True, True)
-    new = {
-        (r["tile_x"], r["tile_y"]): r.asDict()
-        for r in mesh_tiles(points, zoom=2, method="terra", max_error=2.0,
-                            compute_error=True).collect()
-    }
-    cells = cell_grid(points, zoom=2, grid_bits=5, buffer_cells=2)
-    old = {
-        (r["tile_x"], r["tile_y"]): r.asDict()
-        for r in cells.groupBy("tile_x", "tile_y")
-        .applyInPandas(_make_mesh_kernel(*args), TILE_SCHEMA)
-        .collect()
-    }
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    if batch_rows is not None:
+        spark.conf.set(conf, str(batch_rows))
+    try:
+        args = (2, 5, 2, "terra", 2.0, 1, True, True)
+        new = {
+            (r["tile_x"], r["tile_y"]): r.asDict()
+            for r in mesh_tiles(points, zoom=2, method="terra", max_error=2.0,
+                                compute_error=True).collect()
+        }
+        cells = cell_grid(points, zoom=2, grid_bits=5, buffer_cells=2)
+        old = {
+            (r["tile_x"], r["tile_y"]): r.asDict()
+            for r in cells.groupBy("tile_x", "tile_y")
+            .applyInPandas(_make_mesh_kernel(*args), TILE_SCHEMA)
+            .collect()
+        }
+    finally:
+        spark.conf.unset(conf)
     assert set(new) == set(old) and len(new) == 16
     for k, nrow in new.items():
         orow = old[k]

@@ -85,18 +85,19 @@ def cmd_dem2tintiles(args) -> dict:
                 catalog=catalog,
             )
         else:
-            manifest = _raster_pyramid(spark, src, args, catalog)
+            manifest = _raster_pyramid(src, args, catalog)
         print(json.dumps({str(z): e for z, e in sorted(manifest.items())}))
         return manifest
     finally:
         spark.stop()
 
 
-def _raster_pyramid(spark, cells, args, catalog) -> dict:
+def _raster_pyramid(cells, args, catalog) -> dict:
     """Real-coordinate pyramid: per zoom, key the (x, y, z) cells and
     run the shared mesh_tiles operator (the reference's per-zoom
     overview loop, driven from the same points each level)."""
     from .operators.meshing import mesh_tiles
+    from .pipeline.dem2tintiles import write_zoom
     from .sources.geotiff import assign_tile_keys
 
     cells = cells.persist()
@@ -104,21 +105,15 @@ def _raster_pyramid(spark, cells, args, catalog) -> dict:
     try:
         for zoom in range(args.max_zoom, args.min_zoom - 1, -1):
             keyed = assign_tile_keys(cells, zoom=zoom, grid_bits=args.grid_bits)
-            kw = {"step": args.step} if args.method == "dense" else {
-                "max_error": args.max_error if args.max_error is not None else 2.0
-            }
             tiles = mesh_tiles(
                 keyed, zoom=zoom, grid_bits=args.grid_bits,
-                buffer_cells=args.buffer_cells, method=args.method, **kw,
+                buffer_cells=args.buffer_cells, method=args.method,
+                max_error=args.max_error if args.max_error is not None else 2.0,
+                step=args.step,
             )
-            if catalog is not None:
-                catalog.merge(tiles)
-                n = catalog.read().where(f"zoom = {zoom}").count()
-            else:
-                zdir = os.path.join(args.output_dir, f"zoom={zoom}")
-                tiles.write.mode("overwrite").parquet(zdir)
-                n = spark.read.parquet(zdir).count()
-            manifest[zoom] = {"zoom": zoom, "n_tiles": int(n), "method": args.method}
+            zdir = os.path.join(args.output_dir, f"zoom={zoom}")
+            n_tiles = write_zoom(tiles, zoom, zdir, catalog)
+            manifest[zoom] = {"zoom": zoom, "n_tiles": n_tiles, "method": args.method}
     finally:
         cells.unpersist()
     return manifest

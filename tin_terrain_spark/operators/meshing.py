@@ -3,22 +3,33 @@
 Pipeline (reference dem2tintiles, SURVEY.md §3.1), Spark-first:
 
   points(x, y, z, tile, cell)
-    → border-buffer fan-out: a point within `buffer_cells` grid cells of
-      a tile edge is duplicated into the neighbor tile's buffered raster
-      (the reference buffers partitions by resolution*100 m so border
-      triangles survive clipping — dem2tintiles_workflow.cpp:51-53);
-      bounded 1:≤4 row expansion, pure Column exprs
-    → groupBy(tile, row, col).agg(sum(z), count)   ← map-side combine
-      collapses 10^12 points to ≤ (grid_n+2b)² rows per tile BEFORE the
-      heavy shuffle (this is the scale-critical step)
-    → repartition(tile) → sortWithinPartitions(tile) → streaming
-      mapInPandas(mesh_tile_kernel) — walk contiguous tile runs per
-      Arrow batch (one Python round per ~hundreds of tiles, not one
-      pandas group per tile), assemble the dense grid, run
-      Terra/Zemlya/dense greedy meshing, normalize to the unit tile,
-      clip to [0,1]² (TileMaker.cpp:45-124), encode quantized-mesh
+    → base_cells: groupBy(cell).agg(sum(z), count) ← the one heavy
+      shuffle, map-side combined; collapses 10^12 points to one row
+      per occupied cell before anything else runs
+    → cell_grid: border-buffer fan-out — a cell within `buffer_cells`
+      of a tile edge is duplicated into the neighbor tile's buffered
+      raster (the reference buffers partitions by resolution*100 m so
+      border triangles survive clipping —
+      dem2tintiles_workflow.cpp:51-53); bounded 1:≤4, pure Column exprs
+    → stream_tiles: the streaming mesh stage
     → tiles(zoom, tile_x, tile_y, n_points, n_vertices, n_faces,
             max_err, terrain:binary)
+
+Every per-tile decision is made in one function here:
+
+  tile_raster   one tile's cell rows → the buffered, georeferenced Grid
+  generate_tin  meshing-method dispatch (terra | zemlya | dense |
+                curvature); pipeline.dem2tin calls it too
+  mesh_error    rasterise the mesh back, measure it against the source
+  stream_tiles  THE streaming mesh stage: repartition(tile) →
+                sortWithinPartitions(tile) → mapInPandas walking
+                contiguous tile runs per Arrow batch (one Python round
+                per ~hundreds of tiles, not one pandas group per tile).
+                mesh_tiles and the pyramid (pipeline.dem2tintiles) run
+                it with the tile encoder (mesh, normalize to the unit
+                tile, clip to [0,1]² — TileMaker.cpp:45-124 — encode
+                quantized-mesh); the benchmark sweep (pipeline.
+                benchmark) runs it with a mesh+measure function.
 
 Skew: hot tiles are bounded by construction — the pre-aggregation caps
 any tile's kernel input at (grid_n+2b)² rows regardless of how many
@@ -134,71 +145,104 @@ def cell_grid(
     )
 
 
+
+def generate_tin(grid, method: str, param: float, step: int):
+    """Meshing-method dispatch (cmd.cpp:352-392) → (verts, faces).
+    `param` is the max error for terra/zemlya and the curvature
+    threshold for curvature (param_threshold in the reference's
+    benchmark StatsRow); dense quad-walks every `step` cells."""
+    if method == "terra":
+        from ..kernels.terra import generate_tin_terra
+
+        return generate_tin_terra(grid, param)
+    if method == "zemlya":
+        from ..kernels.zemlya import generate_tin_zemlya
+
+        return generate_tin_zemlya(grid, param)
+    if method == "dense":
+        from ..kernels.dense import generate_tin_dense_quadwalk
+
+        return generate_tin_dense_quadwalk(grid, step)
+    if method == "curvature":
+        from ..kernels.curvature import generate_tin_curvature
+
+        return generate_tin_curvature(grid, param)
+    raise ValueError(f"unknown meshing method {method!r}")
+
+
+def _tile_origin(zoom: int, tile_x: int, tile_y: int) -> tuple[float, float]:
+    """Tile lower-left corner in meters (PixelsToMeters,
+    MercatorProjection.cpp:30-37)."""
+    hc = GX.HALF_CIRCUMFERENCE
+    res = 2.0 * hc / 256.0 / (1 << zoom)
+    return tile_x * 256.0 * res - hc, tile_y * 256.0 * res - hc
+
+
+def tile_raster(tile_x: int, tile_y: int, rows: np.ndarray, cols: np.ndarray,
+                z_sum: np.ndarray, z_cnt: np.ndarray, zoom: int,
+                grid_bits: int, buffer_cells: int):
+    """One tile's cell_grid rows → (grid, z, n_points): the buffered
+    raster georeferenced in meters (NaN where no point landed), its z
+    array, and the number of points in the unbuffered interior."""
+    from ..kernels.raster import Grid
+
+    g = 1 << grid_bits
+    b = buffer_cells
+    size = g + 2 * b
+    z = np.full((size, size), np.nan)
+    z[rows, cols] = z_sum / z_cnt
+    interior = (rows >= b) & (rows < g + b) & (cols >= b) & (cols < g + b)
+    n_points = int(z_cnt[interior].sum())
+    cellsize = GX.tile_size_meters(zoom) / g
+    x0, y0 = _tile_origin(zoom, tile_x, tile_y)
+    grid = Grid(z, xpos=x0 - b * cellsize, ypos=y0 - b * cellsize,
+                cellsize=cellsize, ndv=np.nan)
+    return grid, z, n_points
+
+
+def mesh_error(verts: np.ndarray, faces: np.ndarray, z: np.ndarray):
+    """Rasterise a tile mesh back onto its raster and measure it
+    against the source cells → (mean, std, max, n_valid, src), where
+    src is the source as a no-data-masked Grid and max is NaN when no
+    cell was measured."""
+    from ..kernels.mesh2raster import measure_error, rasterise_mesh
+    from ..kernels.raster import Grid
+
+    size = len(z)
+    r = rasterise_mesh(verts, faces, size, size)
+    src = Grid(np.where(np.isnan(z), -99999.0, z), ndv=-99999.0)
+    mean, std, max_err, n_valid, _ = measure_error(r, src)
+    if n_valid == 0:
+        max_err = float("nan")
+    return mean, std, max_err, n_valid, src
+
+
 def _make_tile_fn(zoom: int, grid_bits: int, buffer_cells: int, method: str,
                   max_error: float, step: int, compute_error: bool,
                   encode_terrain: bool):
     """Build the per-tile kernel as a plain-arrays → dict function
     (runs on executors; imports stay inside so the function pickles
-    cleanly). Both the applyInPandas compat wrapper and the streaming
-    mapInPandas path call this."""
-    g = 1 << grid_bits
-    b = buffer_cells
+    cleanly). stream_tiles runs it, and so does the per-group
+    _make_mesh_kernel."""
+    size = (1 << grid_bits) + 2 * buffer_cells
     tile_m = GX.tile_size_meters(zoom)
-    cellsize = tile_m / g
-    hc = GX.HALF_CIRCUMFERENCE
 
     def mesh_tile(tile_x: int, tile_y: int, rows: np.ndarray, cols: np.ndarray,
                   z_sum: np.ndarray, z_cnt: np.ndarray) -> dict:
         from tin_terrain_spark.kernels.codec import encode_qm_tile
-        from tin_terrain_spark.kernels.dense import generate_tin_dense_quadwalk
         from tin_terrain_spark.kernels.geometry import clip_triangles_to_01_quadrant
-        from tin_terrain_spark.kernels.mesh2raster import measure_error, rasterise_mesh
-        from tin_terrain_spark.kernels.raster import Grid
-        from tin_terrain_spark.kernels.terra import generate_tin_terra
-        from tin_terrain_spark.kernels.zemlya import generate_tin_zemlya
 
-        size = g + 2 * b
-        z = np.full((size, size), np.nan)
-        z[rows, cols] = z_sum / z_cnt
-        interior = (rows >= b) & (rows < g + b) & (cols >= b) & (cols < g + b)
-        n_points = int(z_cnt[interior].sum())
-        n_cells = int(len(rows))
-
-        # tile bounds in meters (PixelsToMeters, MercatorProjection.cpp:30-37)
-        res = 2.0 * hc / 256.0 / (1 << zoom)
-        tile_min_x = tile_x * 256.0 * res - hc
-        tile_min_y = tile_y * 256.0 * res - hc
-
-        grid = Grid(
-            z,
-            xpos=tile_min_x - b * cellsize,
-            ypos=tile_min_y - b * cellsize,
-            cellsize=cellsize,
-            ndv=np.nan,
+        grid, z, n_points = tile_raster(
+            tile_x, tile_y, rows, cols, z_sum, z_cnt, zoom, grid_bits, buffer_cells
         )
-        if method == "terra":
-            verts, faces = generate_tin_terra(grid, max_error)
-        elif method == "zemlya":
-            verts, faces = generate_tin_zemlya(grid, max_error)
-        elif method == "dense":
-            verts, faces = generate_tin_dense_quadwalk(grid, step)
-        elif method == "curvature":
-            # the max_error slot carries the curvature threshold
-            # (param_threshold in the reference's benchmark StatsRow)
-            from tin_terrain_spark.kernels.curvature import generate_tin_curvature
-
-            verts, faces = generate_tin_curvature(grid, max_error)
-        else:
-            raise ValueError(f"unknown meshing method {method!r}")
+        n_cells = int(len(rows))
+        tile_min_x, tile_min_y = _tile_origin(zoom, tile_x, tile_y)
+        verts, faces = generate_tin(grid, method, max_error, step)
 
         max_err = float("nan")
         euler_ok = verts_on_grid_ok = cover_ok = None
         if compute_error and len(faces):
-            r = rasterise_mesh(verts, faces, size, size)
-            src = Grid(np.where(np.isnan(z), -99999.0, z), ndv=-99999.0)
-            _, _, max_err, n_valid, _ = measure_error(r, src)
-            if n_valid == 0:
-                max_err = float("nan")
+            _, _, max_err, n_valid, src = mesh_error(verts, faces, z)
 
             # independent invariants, oracled as literal TRUE (a
             # wrong-but-deterministic kernel cannot pass them):
@@ -292,16 +336,17 @@ def _make_tile_fn(zoom: int, grid_bits: int, buffer_cells: int, method: str,
     return mesh_tile
 
 
-_TILE_COLS = (
-    "zoom", "tile_x", "tile_y", "n_points", "n_cells", "n_vertices",
-    "n_faces", "max_err", "min_z", "max_z", "terrain", "euler_ok",
-    "verts_on_grid_ok", "cover_ok",
-)
+def _schema_cols(schema: str) -> tuple[str, ...]:
+    return tuple(field.split()[0] for field in schema.split(","))
+
+
+_TILE_COLS = _schema_cols(TILE_SCHEMA)
 
 
 def _make_mesh_kernel(*args):
-    """applyInPandas-compatible wrapper around _make_tile_fn (kept for
-    the pipeline/benchmark callers that group per tile)."""
+    """applyInPandas-compatible wrapper around _make_tile_fn: the
+    one-group-per-tile reference the streaming stage is tested
+    against."""
     tile_fn = _make_tile_fn(*args)
 
     def mesh_tile(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -315,17 +360,17 @@ def _make_mesh_kernel(*args):
     return mesh_tile
 
 
-def _make_stream_kernel(*args):
+def _make_stream_kernel(tile_fn, cols):
     """mapInPandas generator over TILE-SORTED partitions: walks
     contiguous (tile_x, tile_y) runs inside each Arrow batch with
-    NumPy slicing and emits ONE output DataFrame per batch (hundreds
-    of tiles) instead of one per tile. applyInPandas pays a pandas
-    sub-DataFrame + 1-row result DataFrame per group — measured ~8 ms
-    of per-tile overhead at 65k-tile scale, more than the mesh kernel
-    itself. A tile whose rows span two Arrow batches is carried over
-    in `buf` (rows per tile are contiguous because the partition is
-    sorted by the tile key)."""
-    tile_fn = _make_tile_fn(*args)
+    NumPy slicing, calls `tile_fn(tile_x, tile_y, row_b, col_b, z_sum,
+    z_cnt) → dict` per tile, and emits ONE output DataFrame (columns
+    `cols`) per batch of hundreds of tiles instead of one per tile.
+    applyInPandas pays a pandas sub-DataFrame + 1-row result DataFrame
+    per group — measured ~8 ms of per-tile overhead at 65k-tile scale,
+    more than the mesh kernel itself. A tile whose rows span two Arrow
+    batches is carried over in `buf` (rows per tile are contiguous
+    because the partition is sorted by the tile key)."""
 
     def process(pdf: pd.DataFrame) -> pd.DataFrame:
         tx = pdf["tile_x"].to_numpy()
@@ -343,7 +388,7 @@ def _make_stream_kernel(*args):
             tile_fn(int(tx[s]), int(ty[s]), rb[s:e], cb[s:e], zs[s:e], zc[s:e])
             for s, e in zip(starts, ends)
         ]
-        return pd.DataFrame(out, columns=_TILE_COLS)
+        return pd.DataFrame(out, columns=cols)
 
     def gen(batches):
         buf = None
@@ -368,6 +413,26 @@ def _make_stream_kernel(*args):
     return gen
 
 
+def stream_tiles(grid: DataFrame, tile_fn, schema: str) -> DataFrame:
+    """The streaming mesh stage over a cell_grid frame: one row per
+    tile, `tile_fn` (see _make_stream_kernel) returning the `schema`
+    columns.
+
+    The explicit repartition matters: the cell grid is only KBs after
+    aggregation, so AQE would coalesce it to one partition and
+    serialize the CPU-heavy Python kernels behind it (measured 3-5x
+    slower). A user repartition by the tile key is respected by AQE
+    and sizes tasks by kernel cost, not bytes; sorting within the
+    partitions makes each tile's rows contiguous for the streaming
+    walk."""
+    n = grid.sparkSession.sparkContext.defaultParallelism
+    return (
+        grid.repartition(n, "tile_x", "tile_y")
+        .sortWithinPartitions("tile_x", "tile_y")
+        .mapInPandas(_make_stream_kernel(tile_fn, _schema_cols(schema)), schema)
+    )
+
+
 def mesh_tiles(
     points: DataFrame,
     zoom: int,
@@ -378,31 +443,14 @@ def mesh_tiles(
     step: int = 1,
     compute_error: bool = False,
     encode_terrain: bool = True,
-    mesh_parallelism: int | None = None,
 ) -> DataFrame:
     """Full tile-meshing operator: geocoded points → tile records.
 
     Degenerate tiles (too sparse to carry information) still mesh —
     corner repair (TerraUtils.cpp:8-22) back-fills from the nearest
-    valid cells, exactly as the reference handles no-data regions.
-
-    The explicit repartition before the kernel matters: the cell grid
-    is only KBs after aggregation, so AQE would coalesce it to one
-    partition and serialize the CPU-heavy Python kernels behind it
-    (measured 3-5x slower). A user repartition by the group key is
-    respected by AQE, keeps the hash partitioning applyInPandas needs
-    (no extra shuffle), and sizes tasks by kernel cost, not bytes."""
-    cells = cell_grid(points, zoom, grid_bits, buffer_cells)
-    spark = cells.sparkSession
-    if mesh_parallelism is None:
-        mesh_parallelism = spark.sparkContext.defaultParallelism
-    cells = cells.repartition(mesh_parallelism, "tile_x", "tile_y")
-    # tile-sorted partitions + streaming mapInPandas: one Python/Arrow
-    # round per BATCH of tiles, not one pandas group per tile (the
-    # per-group overhead dominated the kernel at 65k-tile scale)
-    cells = cells.sortWithinPartitions("tile_x", "tile_y")
-    kernel = _make_stream_kernel(
+    valid cells, exactly as the reference handles no-data regions."""
+    tile_fn = _make_tile_fn(
         zoom, grid_bits, buffer_cells, method, max_error, step,
         compute_error, encode_terrain,
     )
-    return cells.mapInPandas(kernel, TILE_SCHEMA)
+    return stream_tiles(cell_grid(points, zoom, grid_bits, buffer_cells), tile_fn, TILE_SCHEMA)

@@ -27,13 +27,12 @@ a `violations` column that must be 0.
 from __future__ import annotations
 
 import os
+import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import geocode_exprs as GX
-from ..operators.meshing import cell_grid
+from ..operators.meshing import cell_grid, generate_tin, mesh_error, stream_tiles, tile_raster
 
 # benchmark_workflow.cpp:554-555
 PARAM_MAX_ERROR = [
@@ -58,85 +57,35 @@ CSV_HEADER = (
 )
 
 
-def _make_sweep_kernel(zoom: int, grid_bits: int, buffer_cells: int,
-                       method: str, max_error: float, step: int,
-                       threshold: float = float("nan")):
-    g = 1 << grid_bits
-    b = buffer_cells
-    tile_m = GX.tile_size_meters(zoom)
-    cellsize = tile_m / g
-    hc = GX.HALF_CIRCUMFERENCE
+def _make_sweep_fn(zoom: int, grid_bits: int, buffer_cells: int,
+                   method: str, param: float, step: int):
+    """Per-tile mesh + measure for meshing.stream_tiles → one
+    SWEEP_SCHEMA row; mesh_seconds times the meshing kernel alone."""
 
-    def sweep_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        import time
-
-        from tin_terrain_spark.kernels.dense import generate_tin_dense_quadwalk
-        from tin_terrain_spark.kernels.mesh2raster import measure_error, rasterise_mesh
-        from tin_terrain_spark.kernels.raster import Grid
-        from tin_terrain_spark.kernels.terra import generate_tin_terra
-        from tin_terrain_spark.kernels.zemlya import generate_tin_zemlya
-
-        tile_x = int(pdf["tile_x"].iloc[0])
-        tile_y = int(pdf["tile_y"].iloc[0])
-        size = g + 2 * b
-        z = np.full((size, size), np.nan)
-        z[pdf["row_b"].to_numpy(), pdf["col_b"].to_numpy()] = (
-            pdf["z_sum"].to_numpy() / pdf["z_cnt"].to_numpy()
-        )
-        n_points = int(
-            pdf.loc[
-                (pdf["row_b"] >= b) & (pdf["row_b"] < g + b)
-                & (pdf["col_b"] >= b) & (pdf["col_b"] < g + b),
-                "z_cnt",
-            ].sum()
-        )
-        res = 2.0 * hc / 256.0 / (1 << zoom)
-        grid = Grid(
-            z,
-            xpos=tile_x * 256.0 * res - hc - b * cellsize,
-            ypos=tile_y * 256.0 * res - hc - b * cellsize,
-            cellsize=cellsize,
-            ndv=np.nan,
+    def sweep_tile(tile_x: int, tile_y: int, rows: np.ndarray, cols: np.ndarray,
+                   z_sum: np.ndarray, z_cnt: np.ndarray) -> dict:
+        grid, z, n_points = tile_raster(
+            tile_x, tile_y, rows, cols, z_sum, z_cnt, zoom, grid_bits, buffer_cells
         )
         t0 = time.perf_counter()
-        if method == "terra":
-            verts, faces = generate_tin_terra(grid, max_error)
-        elif method == "zemlya":
-            verts, faces = generate_tin_zemlya(grid, max_error)
-        elif method == "dense":
-            verts, faces = generate_tin_dense_quadwalk(grid, step)
-        elif method == "curvature":
-            from tin_terrain_spark.kernels.curvature import generate_tin_curvature
-
-            verts, faces = generate_tin_curvature(grid, threshold)
-        else:
-            raise ValueError(f"unknown meshing method {method!r}")
+        verts, faces = generate_tin(grid, method, param, step)
         mesh_seconds = time.perf_counter() - t0
 
         err_n, err_mean, err_std, err_max = 0, 0.0, 0.0, float("nan")
         if len(faces):
-            r = rasterise_mesh(verts, faces, size, size)
-            src = Grid(np.where(np.isnan(z), -99999.0, z), ndv=-99999.0)
-            err_mean, err_std, err_max, err_n, _ = measure_error(r, src)
-            if err_n == 0:
-                err_max = float("nan")
-
-        return pd.DataFrame(
-            [
-                {
-                    "tile_x": tile_x,
-                    "tile_y": tile_y,
-                    "n_points": n_points,
-                    "n_vertices": int(len(verts)),
-                    "n_faces": int(len(faces)),
-                    "mesh_seconds": mesh_seconds,
-                    "err_n": int(err_n),
-                    "err_mean": float(err_mean),
-                    "err_std": float(err_std),
-                    "err_max": float(err_max),
-                }
-            ]
-        )
+            err_mean, err_std, err_max, err_n, _ = mesh_error(verts, faces, z)
+        return {
+            "tile_x": tile_x,
+            "tile_y": tile_y,
+            "n_points": n_points,
+            "n_vertices": int(len(verts)),
+            "n_faces": int(len(faces)),
+            "mesh_seconds": mesh_seconds,
+            "err_n": int(err_n),
+            "err_mean": float(err_mean),
+            "err_std": float(err_std),
+            "err_max": float(err_max),
+        }
 
     return sweep_tile
 
@@ -148,16 +97,11 @@ def run_parametrization(points: DataFrame, zoom: int, method: str,
                         cells: DataFrame | None = None) -> dict:
     """One (method, param) run: distributed mesh+measure over all tiles,
     exact moment merge to a single StatsRow-shaped dict."""
-    spark = points.sparkSession
     if cells is None:
         cells = cell_grid(points, zoom, grid_bits, buffer_cells)
-    cells = cells.repartition(
-        spark.sparkContext.defaultParallelism, "tile_x", "tile_y"
-    )
-    kernel = _make_sweep_kernel(
-        zoom, grid_bits, buffer_cells, method, max_error, step, threshold
-    )
-    per_tile = cells.groupBy("tile_x", "tile_y").applyInPandas(kernel, SWEEP_SCHEMA)
+    param = threshold if method == "curvature" else max_error
+    sweep_fn = _make_sweep_fn(zoom, grid_bits, buffer_cells, method, param, step)
+    per_tile = stream_tiles(cells, sweep_fn, SWEEP_SCHEMA)
 
     is_terra_like = method in ("terra", "zemlya")
     agg = per_tile.agg(
@@ -228,25 +172,19 @@ def run_benchmark_sweep(points: DataFrame, zoom: int, out_dir: str,
     runs = []
     for method in methods:
         if method == "dense":
-            params = steps
+            key, params, cast = "step", steps, int
         elif method == "curvature":
-            params = thresholds
+            key, params, cast = "threshold", thresholds, float
         else:
-            params = max_errors
+            key, params, cast = "max_error", max_errors, float
         for p in params:
             tag = f"{method}_{p}"
             marker = os.path.join(out_dir, f"{tag}.done")
             if resume and os.path.exists(marker):
                 continue
-            if method == "dense":
-                kwargs = {"step": int(p)}
-            elif method == "curvature":
-                kwargs = {"threshold": float(p)}
-            else:
-                kwargs = {"max_error": float(p)}
             row = run_parametrization(
                 points, zoom, method, grid_bits=grid_bits,
-                buffer_cells=buffer_cells, cells=cells, **kwargs,
+                buffer_cells=buffer_cells, cells=cells, **{key: cast(p)},
             )
             row["input_file"] = input_name
             with open(csv_path, "a") as f:

@@ -9,7 +9,8 @@ dem2tintiles_workflow.cpp), Spark-first (SURVEY.md §3.1):
     → for zoom in max_zoom..min_zoom (descending, like
       RasterOverviews::next):
         rollup_cells (Y2 overview reuse — no raw re-scan)
-        cell_grid buffer fan-out (Y3) → mesh_tiles kernel (Y4)
+        cell_grid buffer fan-out (Y3) → meshing.stream_tiles (Y4), the
+          same mesh stage mesh_tiles runs
         write parquet to {out}/zoom={z}/ (overwrite = idempotent)
         append a manifest row (Y5 resume lineage)
 
@@ -33,7 +34,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import geocode_exprs as GX
 from ..operators.geocode import geocode_points
-from ..operators.meshing import TILE_SCHEMA, _make_stream_kernel, base_cells, cell_grid, rollup_cells
+from ..operators.meshing import (
+    TILE_SCHEMA, _make_tile_fn, base_cells, cell_grid, rollup_cells, stream_tiles,
+)
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -50,6 +53,17 @@ def read_manifest(out_dir: str) -> dict[int, dict]:
                     e = json.loads(line)
                     entries[e["zoom"]] = e
     return entries
+
+
+def write_zoom(tiles: DataFrame, zoom: int, zdir: str, catalog=None) -> int:
+    """Write one zoom level's tiles — upsert into `catalog`, else
+    overwrite the parquet dir `zdir` — and return its tile count, read
+    back from the sink."""
+    if catalog is not None:
+        catalog.merge(tiles)
+        return catalog.read().where(f"zoom = {zoom}").count()
+    tiles.write.mode("overwrite").parquet(zdir)
+    return tiles.sparkSession.read.parquet(zdir).count()
 
 
 def build_tile_pyramid(
@@ -105,23 +119,13 @@ def build_tile_pyramid(
                 # per-zoom resolution re-default
                 else GX.tile_size_meters(zoom + grid_bits) / 10000.0
             )
-            kernel = _make_stream_kernel(
-                zoom, grid_bits, buffer_cells, method, me, 1, False, True
-            )
-            grid = grid.repartition(
-                spark.sparkContext.defaultParallelism, "tile_x", "tile_y"
-            ).sortWithinPartitions("tile_x", "tile_y")
-            tiles = grid.mapInPandas(kernel, TILE_SCHEMA)
+            tile_fn = _make_tile_fn(zoom, grid_bits, buffer_cells, method, me, 1, False, True)
+            n_tiles = write_zoom(stream_tiles(grid, tile_fn, TILE_SCHEMA), zoom, zdir, catalog)
             if catalog is not None:
-                catalog.merge(tiles)
-                n_tiles = catalog.read().where(f"zoom = {zoom}").count()
                 # the _SUCCESS gate stays parquet-shaped: mark the zoom
                 # complete with an empty sentinel dir
                 os.makedirs(zdir, exist_ok=True)
                 open(os.path.join(zdir, "_SUCCESS"), "w").close()
-            else:
-                tiles.write.mode("overwrite").parquet(zdir)
-                n_tiles = spark.read.parquet(zdir).count()
             entry = {
                 "zoom": zoom,
                 "n_tiles": n_tiles,

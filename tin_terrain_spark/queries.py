@@ -109,6 +109,8 @@ def _docs(spark: SparkSession, sf_dir: str,
     each) and WINS at sf1.0, so the raw scan is kept exactly where it
     is the faster plan. Result rows are identical either way (a
     repartition reorders, never edits)."""
+    if isinstance(spread, str) and spread != "auto":
+        raise ValueError(f"spread must be True, False or 'auto', not {spread!r}")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     if spread == "auto":
         spread = _spread_pays(f"{sf_dir}/documents.parquet")

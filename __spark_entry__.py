@@ -3,10 +3,12 @@
 entry(spark): flagship dem2tintiles-style pipeline on sf0.001 —
 geocode pages → tile keys → per-tile Terra TIN meshing → tile records.
 
-queries()/oracle_sql(): operator catalog from SURVEY.md §2; oracle SQL
-is generated from the same templates as the Spark plans
-(tin_terrain_spark/functions/geocode_exprs.py) so values are
-bit-identical across engines.
+queries()/oracle_sql(): operator catalog from SURVEY.md §2, returned as
+copies of the two dicts that tin_terrain_spark.queries.register fills
+(one call per query, in queries.py and queries_ext.py, so both dicts
+have the same keys). Oracle SQL is generated from the same templates
+as the Spark plans (tin_terrain_spark/functions/geocode_exprs.py) so
+values are bit-identical across engines.
 """
 
 from __future__ import annotations
@@ -35,19 +37,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from tin_terrain_spark import queries as Q
-    from tin_terrain_spark import queries_ext as QE
+    from tin_terrain_spark import queries_ext  # noqa: F401 — registers the rest
 
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    out.update(Q.QUERIES)
-    out.update(Q.MESH_QUERIES)
-    out.update(QE.QUERIES_EXT)
-    return out
+    return dict(Q.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     from tin_terrain_spark import queries as Q
-    from tin_terrain_spark import queries_ext as QE
+    from tin_terrain_spark import queries_ext  # noqa: F401 — registers the rest
 
-    out = dict(Q.ORACLES)
-    out.update(QE.ORACLES_EXT)
-    return out
+    return dict(Q.ORACLES)

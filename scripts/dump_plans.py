@@ -20,42 +20,21 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main(sf_dir: str = "/root/testdata/sf0.01"):
     from tin_terrain_spark import queries as Q
-    from tin_terrain_spark import queries_ext as QE
+    from tin_terrain_spark import queries_ext  # noqa: F401 — registers the rest
     from tin_terrain_spark.session import get_spark
 
     spark = get_spark("plans", cores=8)
-    targets = {
-        "geocode": Q.QUERIES["geocode"],
-        "tile_counts": Q.QUERIES["tile_counts"],
-        "grid_cells": Q.QUERIES["grid_cells"],
-        "error_stats": Q.QUERIES["error_stats"],
-        "terra_tiles": Q.MESH_QUERIES["terra_tiles"],
-        "pip": QE.QUERIES_EXT["pip"],
-        "knn_brute": QE.QUERIES_EXT["knn_brute"],
-        "minhash": QE.QUERIES_EXT["minhash"],
-        "lsh_candidates": QE.QUERIES_EXT["lsh_candidates"],
-        "vertex_dedup": Q.QUERIES["vertex_dedup"],
-        "ann_brute": QE.QUERIES_EXT["ann_brute"],
-        "ann_lsh": QE.QUERIES_EXT["ann_lsh"],
-        "raster_tiles": QE.QUERIES_EXT["raster_tiles"],
-        "hex_cells": QE.QUERIES_EXT["hex_cells"],
-        "knn_hex": QE.QUERIES_EXT["knn_hex"],
-        "simhash": QE.QUERIES_EXT["simhash"],
-        "asof_join": QE.QUERIES_EXT["asof_join"],
-        "range_join": QE.QUERIES_EXT["range_join"],
-        "host_profile": QE.QUERIES_EXT["host_profile"],
-        "h3_cells": QE.QUERIES_EXT["h3_cells"],
-        "h3_rollup": QE.QUERIES_EXT["h3_rollup"],
-        "contamination": QE.QUERIES_EXT["contamination"],
-        "rep_signals": QE.QUERIES_EXT["rep_signals"],
-        "face_cells": QE.QUERIES_EXT["face_cells"],
+    targets = {name: Q.QUERIES[name] for name in (
+        "geocode", "tile_counts", "grid_cells", "error_stats", "terra_tiles",
+        "pip", "knn_brute", "minhash", "lsh_candidates", "vertex_dedup",
+        "ann_brute", "ann_lsh", "raster_tiles", "hex_cells", "knn_hex",
+        "simhash", "asof_join", "range_join", "host_profile", "h3_cells",
+        "h3_rollup", "contamination", "rep_signals", "face_cells",
         # real-codec round trips: the review point is shape, not
         # pruning — ONE scan, payloads cross Arrow exactly once per
         # stage (no JVM-side explode duplicating containers), map-only
         # until the final rollup/posexplode
-        "media_decode_real": QE.QUERIES_EXT["media_decode_real"],
-        "video_decode_real": QE.QUERIES_EXT["video_decode_real"],
-        "h3_global": QE.QUERIES_EXT["h3_global"],
+        "media_decode_real", "video_decode_real", "h3_global",
         # round-5 session-4 webtext ops: extraction/links are map-only
         # mapInPandas stages; bm25 must broadcast df+stats and shuffle
         # only matching postings; url_canon/pii_scrub must be one
@@ -63,46 +42,30 @@ def main(sf_dir: str = "/root/testdata/sf0.01"):
         # full-outer SortMergeJoin/ShuffledHashJoin on url; pagerank's
         # final plan reads the per-round localCheckpoint (the loop's
         # per-iteration joins are audited in operators/graph.py)
-        "html_extract": QE.QUERIES_EXT["html_extract"],
-        "warc_extract": QE.QUERIES_EXT["warc_extract"],
-        "bm25": QE.QUERIES_EXT["bm25"],
-        "pii_scrub": QE.QUERIES_EXT["pii_scrub"],
-        "url_canon": QE.QUERIES_EXT["url_canon"],
-        "link_graph": QE.QUERIES_EXT["link_graph"],
-        "crawl_delta": QE.QUERIES_EXT["crawl_delta"],
-        "pagerank": QE.QUERIES_EXT["pagerank"],
+        "html_extract", "warc_extract", "bm25", "pii_scrub", "url_canon",
+        "link_graph", "crawl_delta", "pagerank",
         # host_quota must show WindowGroupLimit (map-side top-k before
         # the shuffle); robots_filter a BroadcastHashJoin of the rule
         # table; mix_plan one corpus agg + broadcast arithmetic
-        "host_quota": QE.QUERIES_EXT["host_quota"],
-        "robots_filter": QE.QUERIES_EXT["robots_filter"],
-        "mix_plan": QE.QUERIES_EXT["mix_plan"],
-        "main_text": QE.QUERIES_EXT["main_text"],
+        "host_quota", "robots_filter", "mix_plan", "main_text",
         # round-5 session-5 crawl ops: cdx_index/sitemap_urls are
         # map-only Arrow scans; cdx_fetch's shuffle must be sized by
         # the WANTED index rows (collect_list per file) with the
         # archive side joined in place; etld1 is a broadcast rules
         # join + one agg over distinct hosts; frontier is one window
         # (per-host sequence) + projections
-        "cdx_index": QE.QUERIES_EXT["cdx_index"],
-        "cdx_fetch": QE.QUERIES_EXT["cdx_fetch"],
-        "etld1": QE.QUERIES_EXT["etld1"],
-        "frontier": QE.QUERIES_EXT["frontier"],
-        "sitemap_urls": QE.QUERIES_EXT["sitemap_urls"],
+        "cdx_index", "cdx_fetch", "etld1", "frontier", "sitemap_urls",
         # boilerplate_lines: two map-side-combinable aggs + join-back,
         # NO window; host_graph: parse_url + ONE combinable agg;
         # incr_dedup: the store probe must be a hash equi-join on
         # (band, band_key) with the new batch's subtree on the build
         # side at real store sizes
-        "boilerplate_lines": QE.QUERIES_EXT["boilerplate_lines"],
-        "host_graph": QE.QUERIES_EXT["host_graph"],
-        "incr_dedup": QE.QUERIES_EXT["incr_dedup"],
+        "boilerplate_lines", "host_graph", "incr_dedup",
         # bpe_encode's final plan reads the per-round localCheckpoints
         # (loop discipline); the encode itself is one hash join + one
         # agg. hits likewise shows the checkpointed round outputs.
-        "bpe_encode": QE.QUERIES_EXT["bpe_encode"],
-        "hits": QE.QUERIES_EXT["hits"],
-    }
+        "bpe_encode", "hits",
+    )}
     from bench import bench_queries
 
     # the many-query kNN shape: must show ShuffledHashJoin on the cell

@@ -1,5 +1,6 @@
-"""Freeze golden-row oracles for the deterministic-but-not-SQL-expressible
-mesh queries (terra_tiles, zemlya_tiles, tiles_obj).
+"""Freeze golden-row oracles for the six deterministic but not
+SQL-expressible queries: terra_tiles, zemlya_tiles, tiles_obj,
+points_mesh, curvature_tiles and h3_global.
 
 The kernels are fully deterministic (MT19937(42) insertion order, fixed
 tie rules — SURVEY §2.7), so their outputs on a FIXED input are stable

@@ -219,6 +219,27 @@ def test_spread_pays_reads_footer_not_compressed_size(tmp_path):
     assert _spread_pays(path) is True           # ...but 16k+1 rows of work
 
 
+def test_catalog_registry_pairs_every_query_with_an_oracle():
+    """Each catalog query is one register() call, so queries() and
+    oracle_sql() list the same 93 names in the same order, every oracle
+    is non-empty SQL, and re-registering a name is refused before it
+    touches the registry."""
+    import __spark_entry__ as E
+    from tin_terrain_spark import queries as Q
+
+    qs, oracles = E.queries(), E.oracle_sql()
+    assert len(qs) == 93
+    assert list(qs) == list(oracles)
+    assert all(isinstance(sql, str) and sql.strip() for sql in oracles.values())
+
+    before = (dict(Q.QUERIES), dict(Q.ORACLES))
+    with pytest.raises(ValueError, match="already registered"):
+        Q.register("geocode", Q.q_geocode, "SELECT 1")
+    with pytest.raises(ValueError, match="non-empty oracle"):
+        Q.register("unregistered_probe", Q.q_geocode, "  ")
+    assert (Q.QUERIES, Q.ORACLES) == before
+
+
 def test_knn_ring_prune_multi_round_equals_brute(spark):
     """The guarantee-radius candidate prune must stay exact when round
     1 does NOT resolve: a sparse far-apart corpus with a deliberately

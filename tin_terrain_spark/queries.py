@@ -1,11 +1,16 @@
 """Query registry: the driver-facing operator catalog.
 
-Each entry pairs a Spark DataFrame builder with (where SQL-expressible)
-an equivalent DuckDB oracle SQL string. Both sides are generated from
-the SAME SQL templates (functions/geocode_exprs.py), so tile keys,
-hashes, and coordinates are bit-identical across engines; aggregate
-doubles are rounded to 6 decimals on both sides to absorb
-summation-order ULPs.
+Every catalog query is one `register(name, builder, oracle)` call that
+adds its Spark DataFrame builder to QUERIES and its DuckDB oracle SQL
+to ORACLES; queries_ext.py registers the rest of the catalog into the
+same two dicts. A duplicate name or a missing oracle fails at import.
+
+Both sides are generated from the SAME SQL templates
+(functions/geocode_exprs.py), so tile keys, hashes, and coordinates
+are bit-identical across engines; aggregate doubles are rounded to 6
+decimals on both sides to absorb summation-order ULPs. Deterministic
+but non-SQL-expressible outputs (the greedy meshers) get golden-row
+oracles (_golden_oracle_sql).
 
 Column-name contract: every computed column is aliased identically in
 the Spark plan and the oracle SQL (the driver hashes values after
@@ -15,6 +20,7 @@ sorting columns by name).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -39,16 +45,11 @@ GRID_BITS = 5
 # exactly the dup-heavy case. Uncompressed bytes (8 MiB) catch
 # few-but-huge-doc corpora the row gate would miss. Compressed file
 # size (1 MiB) is the fallback when no footer is readable.
-# All three env-overridable (scripts/ab_spread.py re-measures).
-_SPREAD_MIN_ROWS = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MIN_ROWS", str(16 * 1024))
-)
-_SPREAD_MIN_UBYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MIN_UBYTES", str(8 * 1024 * 1024))
-)
-_SPREAD_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", str(1024 * 1024))
-)
+# Plain constants: scripts/ab_spread.py re-measures the gate by
+# switching _docs itself, not these thresholds.
+_SPREAD_MIN_ROWS = 16 * 1024
+_SPREAD_MIN_UBYTES = 8 * 1024 * 1024
+_SPREAD_MIN_BYTES = 1024 * 1024
 
 
 def _spread_pays(path: str) -> bool:
@@ -430,33 +431,36 @@ SQL_VERTEX_DEDUP = f"""
 # registry
 # --------------------------------------------------------------------------
 
-QUERIES = {
-    "geocode": q_geocode,
-    "tile_counts": q_tile_counts,
-    "tile_bounds": q_tile_bounds,
-    "zoom_pyramid": q_zoom_pyramid,
-    "grid_cells": q_grid_cells,
-    "downsample": q_downsample,
-    "error_stats": q_error_stats,
-    "edge_count": q_edge_count,
-    "vertex_dedup": q_vertex_dedup,
-}
+Builder = Callable[[SparkSession, str], DataFrame]
 
-ORACLES = {
-    "geocode": SQL_GEOCODE,
-    "tile_counts": SQL_TILE_COUNTS,
-    "tile_bounds": SQL_TILE_BOUNDS,
-    "zoom_pyramid": SQL_ZOOM_PYRAMID,
-    "grid_cells": SQL_GRID_CELLS,
-    "downsample": SQL_DOWNSAMPLE,
-    "error_stats": SQL_ERROR_STATS,
-    "edge_count": SQL_EDGE_COUNT,
-    "vertex_dedup": SQL_VERTEX_DEDUP,
-}
+QUERIES: dict[str, Builder] = {}
+ORACLES: dict[str, str] = {}
+
+
+def register(name: str, builder: Builder, oracle: str) -> None:
+    """Add one catalog query: its Spark builder and its DuckDB oracle
+    SQL, in one call. Registration order is the order of queries()."""
+    if name in QUERIES:
+        raise ValueError(f"query {name!r} is already registered")
+    if not isinstance(oracle, str) or not oracle.strip():
+        raise ValueError(f"query {name!r} needs a non-empty oracle SQL string")
+    QUERIES.update({name: builder})
+    ORACLES.update({name: oracle})
+
+
+register("geocode", q_geocode, SQL_GEOCODE)
+register("tile_counts", q_tile_counts, SQL_TILE_COUNTS)
+register("tile_bounds", q_tile_bounds, SQL_TILE_BOUNDS)
+register("zoom_pyramid", q_zoom_pyramid, SQL_ZOOM_PYRAMID)
+register("grid_cells", q_grid_cells, SQL_GRID_CELLS)
+register("downsample", q_downsample, SQL_DOWNSAMPLE)
+register("error_stats", q_error_stats, SQL_ERROR_STATS)
+register("edge_count", q_edge_count, SQL_EDGE_COUNT)
+register("vertex_dedup", q_vertex_dedup, SQL_VERTEX_DEDUP)
 
 
 # --------------------------------------------------------------------------
-# non-SQL-expressible: the meshing pipeline itself (rows-only checks)
+# the meshing pipeline itself: golden-row and count-law oracles
 # --------------------------------------------------------------------------
 
 
@@ -506,13 +510,6 @@ def q_curvature_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).drop("terrain")
 
 
-MESH_QUERIES = {
-    "terra_tiles": q_terra_tiles,
-    "zemlya_tiles": q_zemlya_tiles,
-    "dense_tiles": q_dense_tiles,
-    "curvature_tiles": q_curvature_tiles,
-}
-
 def _golden_oracle_sql(name: str, true_cols: tuple[str, ...] = ()) -> str:
     """Golden-row oracle for deterministic non-SQL-expressible queries
     (terra/zemlya greedy meshing, OBJ sink): the frozen rows from
@@ -556,19 +553,15 @@ def _golden_oracle_sql(name: str, true_cols: tuple[str, ...] = ()) -> str:
 
 
 _MESH_INVARIANT_COLS = ("euler_ok", "verts_on_grid_ok", "cover_ok")
-ORACLES["terra_tiles"] = _golden_oracle_sql("terra_tiles", _MESH_INVARIANT_COLS)
-ORACLES["zemlya_tiles"] = _golden_oracle_sql("zemlya_tiles", _MESH_INVARIANT_COLS)
-try:
-    ORACLES["curvature_tiles"] = _golden_oracle_sql(
-        "curvature_tiles", _MESH_INVARIANT_COLS
-    )
-except KeyError:
-    pass  # goldens.json not yet refrozen for this query
+register("terra_tiles", q_terra_tiles,
+         _golden_oracle_sql("terra_tiles", _MESH_INVARIANT_COLS))
+register("zemlya_tiles", q_zemlya_tiles,
+         _golden_oracle_sql("zemlya_tiles", _MESH_INVARIANT_COLS))
 
 # dense count law at grid_n=32, step=2: verts_per_row = (31//2)+1+1 = 17
 # → 289 vertices, 16*16*2 = 512 faces per tile (simple_meshing.cpp:115-125)
 _DENSE_POINTS_SQL = _points_sql(zoom=2)
-ORACLES["dense_tiles"] = f"""
+register("dense_tiles", q_dense_tiles, f"""
   SELECT tile_x, tile_y,
          count(*) AS n_points,
          CAST(count(DISTINCT (cell_x, cell_y)) AS INTEGER) AS n_cells,
@@ -576,4 +569,6 @@ ORACLES["dense_tiles"] = f"""
          CAST(512 AS INTEGER) AS n_faces
   FROM ({_DENSE_POINTS_SQL})
   GROUP BY tile_x, tile_y
-"""
+""")
+register("curvature_tiles", q_curvature_tiles,
+         _golden_oracle_sql("curvature_tiles", _MESH_INVARIANT_COLS))

@@ -1,6 +1,7 @@
 """Extended query registry: spatial joins, dedup, text analysis,
 similarity search, event-stream aggregation. Same contract as
-queries.py (aliased columns, oracle SQL from shared templates)."""
+queries.py (aliased columns, oracle SQL from shared templates): each
+query is one queries.register call into the shared QUERIES/ORACLES."""
 
 from __future__ import annotations
 
@@ -14,7 +15,18 @@ from .operators import similarity as S
 from .operators import textops as T
 from .operators import urlops as U
 from .operators.geocode import geocode_points
-from .queries import GRID_BITS, ZOOM, _docs, _points_sql
+from .queries import (
+    GRID_BITS,
+    QUERIES,
+    ZOOM,
+    _docs,
+    _golden_oracle_sql,
+    _points_sql,
+    register,
+)
+
+# the whole catalog under its old name (bench.py reads QE.QUERIES_EXT)
+QUERIES_EXT = QUERIES
 
 
 # --------------------------------------------------------------------------
@@ -509,69 +521,37 @@ SQL_RANGE_JOIN = """
 """
 
 
-QUERIES_EXT = {
-    "pip": q_pip,
-    "knn_brute": q_knn_brute,
-    "knn_ring": q_knn_ring,
-    "knn_hex": q_knn_hex,
-    "hex_cells": q_hex_cells,
-    "h3_cells": q_h3_cells,
-    "exact_dedup": q_exact_dedup,
-    "minhash": q_minhash,
-    "lsh_candidates": q_lsh_candidates,
-    "simhash": q_simhash,
-    "winnow": q_winnow,
-    "text_stats": q_text_stats,
-    "fingerprints": q_fingerprints,
-    "langid": q_langid,
-    "token_counts": q_token_counts,
-    "normalize_text": q_normalize_text,
-    "stratified_sample": q_stratified_sample,
-    "sample_profile": q_sample_profile,
-    "embed_near_dup": q_embed_near_dup,
-    "lang_profile": q_lang_profile,
-    "ann_brute": q_ann_brute,
-    "ann_lsh": q_ann_lsh,
-    "ann_ivf": q_ann_ivf,
-    "events_window": q_events_window,
-    "sessionize": q_sessionize,
-    "asof_join": q_asof_join,
-    "range_join": q_range_join,
-    "host_profile": q_host_profile,
-}
-
-ORACLES_EXT = {
-    "pip": SQL_PIP,
-    "knn_brute": SQL_KNN_BRUTE,
-    "knn_ring": SQL_KNN_BRUTE,  # the ring path must equal brute force
-    "knn_hex": SQL_KNN_BRUTE,  # hex-ring expansion must equal brute force
-    "hex_cells": _sql_hex_cells(),
-    "h3_cells": _sql_h3_cells(),
-    "exact_dedup": SQL_EXACT_DEDUP,
-    "minhash": SQL_MINHASH,
-    "lsh_candidates": SQL_LSH_CANDIDATES,
-    "simhash": SQL_SIMHASH,
-    "winnow": D.sql_winnow_fingerprints(),
-    "text_stats": T.sql_text_stats(),
-    "fingerprints": T.SQL_FINGERPRINTS,
-    "langid": T.sql_langid(),
-    "token_counts": T.sql_token_counts(),
-    "normalize_text": T.SQL_NORMALIZE_TEXT,
-    "embed_near_dup": S.sql_embed_near_dup(),
-    "stratified_sample": SM.sql_stratified_sample(),
-    "sample_profile": SM.sql_sample_profile(),
-    "lang_profile": SQL_LANG_PROFILE,
-    "ann_brute": S.sql_ann_brute(),
-    # ann_lsh is approximate vs brute, but DETERMINISTIC: the integer
-    # SRP bucketing is SQL-expressible, so it gets a full oracle too
-    "ann_lsh": S.sql_ann_lsh(),
-    "ann_ivf": S.sql_ann_ivf(),
-    "events_window": SQL_EVENTS_WINDOW,
-    "sessionize": SQL_SESSIONIZE,
-    "asof_join": SQL_ASOF_JOIN,
-    "range_join": SQL_RANGE_JOIN,
-    "host_profile": U.sql_host_profile(),
-}
+register("pip", q_pip, SQL_PIP)
+register("knn_brute", q_knn_brute, SQL_KNN_BRUTE)
+# the ring path and the hex-ring expansion must both equal brute force
+register("knn_ring", q_knn_ring, SQL_KNN_BRUTE)
+register("knn_hex", q_knn_hex, SQL_KNN_BRUTE)
+register("hex_cells", q_hex_cells, _sql_hex_cells())
+register("h3_cells", q_h3_cells, _sql_h3_cells())
+register("exact_dedup", q_exact_dedup, SQL_EXACT_DEDUP)
+register("minhash", q_minhash, SQL_MINHASH)
+register("lsh_candidates", q_lsh_candidates, SQL_LSH_CANDIDATES)
+register("simhash", q_simhash, SQL_SIMHASH)
+register("winnow", q_winnow, D.sql_winnow_fingerprints())
+register("text_stats", q_text_stats, T.sql_text_stats())
+register("fingerprints", q_fingerprints, T.SQL_FINGERPRINTS)
+register("langid", q_langid, T.sql_langid())
+register("token_counts", q_token_counts, T.sql_token_counts())
+register("normalize_text", q_normalize_text, T.SQL_NORMALIZE_TEXT)
+register("stratified_sample", q_stratified_sample, SM.sql_stratified_sample())
+register("sample_profile", q_sample_profile, SM.sql_sample_profile())
+register("embed_near_dup", q_embed_near_dup, S.sql_embed_near_dup())
+register("lang_profile", q_lang_profile, SQL_LANG_PROFILE)
+register("ann_brute", q_ann_brute, S.sql_ann_brute())
+# ann_lsh is approximate vs brute, but DETERMINISTIC: the integer
+# SRP bucketing is SQL-expressible, so it gets a full oracle too
+register("ann_lsh", q_ann_lsh, S.sql_ann_lsh())
+register("ann_ivf", q_ann_ivf, S.sql_ann_ivf())
+register("events_window", q_events_window, SQL_EVENTS_WINDOW)
+register("sessionize", q_sessionize, SQL_SESSIONIZE)
+register("asof_join", q_asof_join, SQL_ASOF_JOIN)
+register("range_join", q_range_join, SQL_RANGE_JOIN)
+register("host_profile", q_host_profile, U.sql_host_profile())
 
 
 # --------------------------------------------------------------------------
@@ -715,19 +695,11 @@ def q_tiles_obj(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT.update(
-    {
-        "text_roundtrip": q_text_roundtrip,
-        "media_features": q_media_features,
-        "media_resize": q_media_resize,
-        "frame_sample": q_frame_sample,
-        "tiles_obj": q_tiles_obj,
-    }
-)
-ORACLES_EXT["text_roundtrip"] = SQL_TEXT_ROUNDTRIP
-ORACLES_EXT["media_features"] = SQL_MEDIA_FEATURES
-ORACLES_EXT["media_resize"] = SQL_MEDIA_RESIZE
-ORACLES_EXT["frame_sample"] = SQL_FRAME_SAMPLE
+register("text_roundtrip", q_text_roundtrip, SQL_TEXT_ROUNDTRIP)
+register("media_features", q_media_features, SQL_MEDIA_FEATURES)
+register("media_resize", q_media_resize, SQL_MEDIA_RESIZE)
+register("frame_sample", q_frame_sample, SQL_FRAME_SAMPLE)
+register("tiles_obj", q_tiles_obj, _golden_oracle_sql("tiles_obj"))
 
 
 def q_pip_convex(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -866,11 +838,6 @@ def _sql_near_dup_pairs(threshold: float = 0.5) -> str:
     """
 
 
-from .queries import _golden_oracle_sql  # noqa: E402
-
-ORACLES_EXT["tiles_obj"] = _golden_oracle_sql("tiles_obj")
-
-
 def q_raster_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 end-to-end: GeoTIFF granules (committed fixtures; one plain,
     one deflate) → binaryFile decode → pixel-center points → tile keys
@@ -901,8 +868,7 @@ SQL_RASTER_TILES = """
   FROM (SELECT unnest(range(0, 2)) AS i)
 """
 
-QUERIES_EXT["raster_tiles"] = q_raster_tiles
-ORACLES_EXT["raster_tiles"] = SQL_RASTER_TILES
+register("raster_tiles", q_raster_tiles, SQL_RASTER_TILES)
 
 
 POINTS_MESH_SCHEMA = (
@@ -957,32 +923,15 @@ def q_points_mesh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cells.groupBy("tile_x", "tile_y").applyInPandas(kern, POINTS_MESH_SCHEMA)
 
 
-QUERIES_EXT["points_mesh"] = q_points_mesh
-try:
-    ORACLES_EXT["points_mesh"] = _golden_oracle_sql("points_mesh")
-except KeyError:
-    pass  # goldens.json not yet refrozen for this query
-
-QUERIES_EXT.update(
-    {
-        "pip_convex": q_pip_convex,
-        "near_dup_pairs": q_near_dup_pairs,
-        "contamination": q_contamination,
-        "rep_signals": q_rep_signals,
-        "dup_clusters": q_dup_clusters,
-        "h3_rollup": q_h3_rollup,
-        "quality_filter": q_quality_filter,
-    }
-)
-ORACLES_EXT["h3_rollup"] = _sql_h3_rollup()
-ORACLES_EXT["quality_filter"] = T.sql_quality_filter()
-ORACLES_EXT["contamination"] = D.sql_contamination()
-ORACLES_EXT["rep_signals"] = T.sql_rep_signals()
-ORACLES_EXT["dup_clusters"] = D.sql_dup_clusters(
-    pairs_sql=_sql_near_dup_pairs()
-)
-ORACLES_EXT["pip_convex"] = SQL_PIP_CONVEX
-ORACLES_EXT["near_dup_pairs"] = _sql_near_dup_pairs()
+register("points_mesh", q_points_mesh, _golden_oracle_sql("points_mesh"))
+register("pip_convex", q_pip_convex, SQL_PIP_CONVEX)
+register("near_dup_pairs", q_near_dup_pairs, _sql_near_dup_pairs())
+register("contamination", q_contamination, D.sql_contamination())
+register("rep_signals", q_rep_signals, T.sql_rep_signals())
+register("dup_clusters", q_dup_clusters,
+         D.sql_dup_clusters(pairs_sql=_sql_near_dup_pairs()))
+register("h3_rollup", q_h3_rollup, _sql_h3_rollup())
+register("quality_filter", q_quality_filter, T.sql_quality_filter())
 
 
 # --------------------------------------------------------------------------
@@ -1099,8 +1048,7 @@ def _sql_face_cells(res: int = FACE_RES) -> str:
     """
 
 
-QUERIES_EXT["face_cells"] = q_face_cells
-ORACLES_EXT["face_cells"] = _sql_face_cells()
+register("face_cells", q_face_cells, _sql_face_cells())
 
 
 def q_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1132,8 +1080,7 @@ def _sql_dedup_keep() -> str:
     """
 
 
-QUERIES_EXT["dedup_keep"] = q_dedup_keep
-ORACLES_EXT["dedup_keep"] = _sql_dedup_keep()
+register("dedup_keep", q_dedup_keep, _sql_dedup_keep())
 
 
 def q_media_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1198,8 +1145,7 @@ SQL_MEDIA_DECODE_REAL = """
   FROM grid g LEFT JOIN vals v ON v.doc_id = g.doc_id AND v.j = g.j
 """
 
-QUERIES_EXT["media_decode_real"] = q_media_decode_real
-ORACLES_EXT["media_decode_real"] = SQL_MEDIA_DECODE_REAL
+register("media_decode_real", q_media_decode_real, SQL_MEDIA_DECODE_REAL)
 
 
 def q_audio_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1265,8 +1211,7 @@ SQL_AUDIO_DECODE_REAL = """
   FROM v GROUP BY doc_id, format, block
 """
 
-QUERIES_EXT["audio_decode_real"] = q_audio_decode_real
-ORACLES_EXT["audio_decode_real"] = SQL_AUDIO_DECODE_REAL
+register("audio_decode_real", q_audio_decode_real, SQL_AUDIO_DECODE_REAL)
 
 
 def q_video_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1310,8 +1255,7 @@ SQL_VIDEO_DECODE_REAL = """
   LATERAL (SELECT unnest(range(0, 8)) AS j) dj
 """
 
-QUERIES_EXT["video_decode_real"] = q_video_decode_real
-ORACLES_EXT["video_decode_real"] = SQL_VIDEO_DECODE_REAL
+register("video_decode_real", q_video_decode_real, SQL_VIDEO_DECODE_REAL)
 
 
 H3_GLOBAL_RES = 2  # ~5.9k cells globally; every base cell reachable
@@ -1396,8 +1340,7 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.lm_score(_docs(spark, sf_dir, spread="auto"))
 
 
-QUERIES_EXT["lm_score"] = q_lm_score
-ORACLES_EXT["lm_score"] = T.sql_lm_score()
+register("lm_score", q_lm_score, T.sql_lm_score())
 
 
 def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1422,8 +1365,7 @@ def _sql_kmv_distinct() -> str:
     )
 
 
-QUERIES_EXT["kmv_distinct"] = q_kmv_distinct
-ORACLES_EXT["kmv_distinct"] = _sql_kmv_distinct()
+register("kmv_distinct", q_kmv_distinct, _sql_kmv_distinct())
 
 
 def q_span_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1433,8 +1375,7 @@ def q_span_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.span_dups(_docs(spark, sf_dir))
 
 
-QUERIES_EXT["span_dups"] = q_span_dups
-ORACLES_EXT["span_dups"] = D.sql_span_dups()
+register("span_dups", q_span_dups, D.sql_span_dups())
 
 
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1444,17 +1385,11 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.inverted_index(_docs(spark, sf_dir))
 
 
-QUERIES_EXT["inverted_index"] = q_inverted_index
-ORACLES_EXT["inverted_index"] = T.sql_inverted_index()
+register("inverted_index", q_inverted_index, T.sql_inverted_index())
 
 
-QUERIES_EXT["h3_global"] = q_h3_global
-try:
-    ORACLES_EXT["h3_global"] = _golden_oracle_sql(
-        "h3_global", ("roundtrip_ok",)
-    )
-except KeyError:
-    pass  # goldens.json not yet refrozen for this query
+register("h3_global", q_h3_global,
+         _golden_oracle_sql("h3_global", ("roundtrip_ok",)))
 
 
 def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1486,8 +1421,7 @@ def _sql_html_extract() -> str:
     return H.sql_html_extract()
 
 
-QUERIES_EXT["html_extract"] = q_html_extract
-ORACLES_EXT["html_extract"] = _sql_html_extract()
+register("html_extract", q_html_extract, _sql_html_extract())
 
 
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1497,8 +1431,7 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.bm25(_docs(spark, sf_dir, spread="auto"))
 
 
-QUERIES_EXT["bm25"] = q_bm25
-ORACLES_EXT["bm25"] = T.sql_bm25()
+register("bm25", q_bm25, T.sql_bm25())
 
 
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1509,8 +1442,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.pii_scrub(T.synth_pii(_docs(spark, sf_dir, spread=False)))
 
 
-QUERIES_EXT["pii_scrub"] = q_pii_scrub
-ORACLES_EXT["pii_scrub"] = T.sql_pii_scrub()
+register("pii_scrub", q_pii_scrub, T.sql_pii_scrub())
 
 
 def q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1572,8 +1504,7 @@ def _sql_warc_extract() -> str:
     """
 
 
-QUERIES_EXT["warc_extract"] = q_warc_extract
-ORACLES_EXT["warc_extract"] = _sql_warc_extract()
+register("warc_extract", q_warc_extract, _sql_warc_extract())
 
 
 def q_url_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1584,8 +1515,7 @@ def q_url_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
     return U.canonicalize_url(U.synth_noisy_urls(_docs(spark, sf_dir, spread=False)))
 
 
-QUERIES_EXT["url_canon"] = q_url_canon
-ORACLES_EXT["url_canon"] = U.sql_url_canon()
+register("url_canon", q_url_canon, U.sql_url_canon())
 
 
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1612,8 +1542,7 @@ def _sql_pagerank() -> str:
     return sql_pagerank()
 
 
-QUERIES_EXT["pagerank"] = q_pagerank
-ORACLES_EXT["pagerank"] = _sql_pagerank()
+register("pagerank", q_pagerank, _sql_pagerank())
 
 
 def q_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1661,8 +1590,7 @@ def _sql_link_graph() -> str:
     """
 
 
-QUERIES_EXT["link_graph"] = q_link_graph
-ORACLES_EXT["link_graph"] = _sql_link_graph()
+register("link_graph", q_link_graph, _sql_link_graph())
 
 
 def q_crawl_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1674,8 +1602,7 @@ def q_crawl_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return U.snapshot_delta(a, b)
 
 
-QUERIES_EXT["crawl_delta"] = q_crawl_delta
-ORACLES_EXT["crawl_delta"] = U.sql_snapshot_delta()
+register("crawl_delta", q_crawl_delta, U.sql_snapshot_delta())
 
 
 def q_host_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1715,8 +1642,7 @@ def _sql_host_quota() -> str:
     """
 
 
-QUERIES_EXT["host_quota"] = q_host_quota
-ORACLES_EXT["host_quota"] = _sql_host_quota()
+register("host_quota", q_host_quota, _sql_host_quota())
 
 
 def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1769,8 +1695,7 @@ def _sql_robots_filter() -> str:
     """
 
 
-QUERIES_EXT["robots_filter"] = q_robots_filter
-ORACLES_EXT["robots_filter"] = _sql_robots_filter()
+register("robots_filter", q_robots_filter, _sql_robots_filter())
 
 
 def q_charset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1805,8 +1730,7 @@ def _sql_charset_decode() -> str:
     """
 
 
-QUERIES_EXT["charset_decode"] = q_charset_decode
-ORACLES_EXT["charset_decode"] = _sql_charset_decode()
+register("charset_decode", q_charset_decode, _sql_charset_decode())
 
 
 def q_mix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1825,8 +1749,7 @@ def _sql_mix_plan() -> str:
     return sql_mix_plan()
 
 
-QUERIES_EXT["mix_plan"] = q_mix_plan
-ORACLES_EXT["mix_plan"] = _sql_mix_plan()
+register("mix_plan", q_mix_plan, _sql_mix_plan())
 
 
 def q_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1860,8 +1783,7 @@ def _sql_main_text() -> str:
     """
 
 
-QUERIES_EXT["main_text"] = q_main_text
-ORACLES_EXT["main_text"] = _sql_main_text()
+register("main_text", q_main_text, _sql_main_text())
 
 
 def q_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1914,8 +1836,7 @@ def _sql_sitemap_urls() -> str:
     """
 
 
-QUERIES_EXT["sitemap_urls"] = q_sitemap_urls
-ORACLES_EXT["sitemap_urls"] = _sql_sitemap_urls()
+register("sitemap_urls", q_sitemap_urls, _sql_sitemap_urls())
 
 
 def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1981,8 +1902,7 @@ def _sql_cdx_index() -> str:
     """
 
 
-QUERIES_EXT["cdx_index"] = q_cdx_index
-ORACLES_EXT["cdx_index"] = _sql_cdx_index()
+register("cdx_index", q_cdx_index, _sql_cdx_index())
 
 
 def q_etld1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2039,8 +1959,7 @@ def _sql_etld1() -> str:
     """
 
 
-QUERIES_EXT["etld1"] = q_etld1
-ORACLES_EXT["etld1"] = _sql_etld1()
+register("etld1", q_etld1, _sql_etld1())
 
 
 def q_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2112,8 +2031,7 @@ def _sql_frontier() -> str:
     """
 
 
-QUERIES_EXT["frontier"] = q_frontier
-ORACLES_EXT["frontier"] = _sql_frontier()
+register("frontier", q_frontier, _sql_frontier())
 
 
 def q_cdx_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2170,8 +2088,7 @@ def _sql_cdx_fetch() -> str:
     """
 
 
-QUERIES_EXT["cdx_fetch"] = q_cdx_fetch
-ORACLES_EXT["cdx_fetch"] = _sql_cdx_fetch()
+register("cdx_fetch", q_cdx_fetch, _sql_cdx_fetch())
 
 
 def q_sitemap_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2253,8 +2170,7 @@ def _sql_sitemap_tree() -> str:
     """
 
 
-QUERIES_EXT["sitemap_tree"] = q_sitemap_tree
-ORACLES_EXT["sitemap_tree"] = _sql_sitemap_tree()
+register("sitemap_tree", q_sitemap_tree, _sql_sitemap_tree())
 
 
 def q_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2299,8 +2215,7 @@ def _sql_host_graph() -> str:
     """
 
 
-QUERIES_EXT["host_graph"] = q_host_graph
-ORACLES_EXT["host_graph"] = _sql_host_graph()
+register("host_graph", q_host_graph, _sql_host_graph())
 
 
 def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2366,8 +2281,7 @@ def _sql_boilerplate_lines() -> str:
     """
 
 
-QUERIES_EXT["boilerplate_lines"] = q_boilerplate_lines
-ORACLES_EXT["boilerplate_lines"] = _sql_boilerplate_lines()
+register("boilerplate_lines", q_boilerplate_lines, _sql_boilerplate_lines())
 
 
 def q_incr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2429,8 +2343,7 @@ def _sql_incr_dedup(threshold: float = 0.5, bands: int = 4) -> str:
     """
 
 
-QUERIES_EXT["incr_dedup"] = q_incr_dedup
-ORACLES_EXT["incr_dedup"] = _sql_incr_dedup()
+register("incr_dedup", q_incr_dedup, _sql_incr_dedup())
 
 
 def q_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2465,8 +2378,7 @@ def _sql_length_quantiles() -> str:
     """
 
 
-QUERIES_EXT["length_quantiles"] = q_length_quantiles
-ORACLES_EXT["length_quantiles"] = _sql_length_quantiles()
+register("length_quantiles", q_length_quantiles, _sql_length_quantiles())
 
 
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2512,8 +2424,7 @@ def _sql_bpe_merges(k: int = 6) -> str:
     return "WITH " + ",\n      ".join(parts) + "\n      " + union
 
 
-QUERIES_EXT["bpe_merges"] = q_bpe_merges
-ORACLES_EXT["bpe_merges"] = _sql_bpe_merges()
+register("bpe_merges", q_bpe_merges, _sql_bpe_merges())
 
 
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2543,8 +2454,7 @@ def _sql_bpe_encode(k: int = 6) -> str:
     """
 
 
-QUERIES_EXT["bpe_encode"] = q_bpe_encode
-ORACLES_EXT["bpe_encode"] = _sql_bpe_encode()
+register("bpe_encode", q_bpe_encode, _sql_bpe_encode())
 
 
 def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2568,8 +2478,7 @@ def _sql_hits() -> str:
     return sql_hits()
 
 
-QUERIES_EXT["hits"] = q_hits
-ORACLES_EXT["hits"] = _sql_hits()
+register("hits", q_hits, _sql_hits())
 
 
 def q_robots_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2623,8 +2532,7 @@ def _sql_robots_meta() -> str:
     """
 
 
-QUERIES_EXT["robots_meta"] = q_robots_meta
-ORACLES_EXT["robots_meta"] = _sql_robots_meta()
+register("robots_meta", q_robots_meta, _sql_robots_meta())
 
 
 def q_anchor_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2690,5 +2598,4 @@ def _sql_anchor_text() -> str:
     """
 
 
-QUERIES_EXT["anchor_text"] = q_anchor_text
-ORACLES_EXT["anchor_text"] = _sql_anchor_text()
+register("anchor_text", q_anchor_text, _sql_anchor_text())
